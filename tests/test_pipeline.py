@@ -45,6 +45,83 @@ def test_retry_contract(spark, tiled_df):
     assert res2 == {"failed_tiles": [], "nr_success": 3}
 
 
+def test_retry_isolation(spark, tiled_df, tmp_path, caplog):
+    # A worker that mutates its input in place and then raises on its
+    # first attempt: the retry (run in the same task) must see the
+    # original rows, and each status row counts the tile's attempts.
+    from tile_processor_spark.pipeline.workers import register_worker
+
+    def mutate_then_fail(tile_id, pdf, config):
+        import os
+
+        seen = os.path.join(config["seen_dir"], tile_id)
+        with open(seen, "a") as f:
+            f.write(f"{int(pdf['v'].sum())}\n")
+        pdf["v"] = -1
+        if tile_id == "b" and os.path.getsize(seen) == len("10\n"):
+            raise RuntimeError("first attempt fails after mutating its input")
+        return pdf
+
+    register_worker("_mutate_then_fail", mutate_then_fail)
+    for sub in ("status", "result"):
+        (tmp_path / sub).mkdir()
+    cfg = {"seen_dir": str(tmp_path / "status")}
+    status = run_worker_over_tiles(tiled_df, "_mutate_then_fail", cfg, restarts=1)
+    by_tile = {r.tile_id: r for r in status.collect()}
+    assert {t: (r.success, r.attempts) for t, r in by_tile.items()} == {
+        "a": (True, 1), "b": (True, 2), "c": (True, 1),
+    }
+    # 0+1+2+3+4 on both attempts: the mutation did not reach the retry
+    assert (tmp_path / "status" / "b").read_text().split() == ["10", "10"]
+
+    with caplog.at_level("INFO", logger="tile_processor_spark.pipeline.processor"):
+        res = run_with_retry(
+            tiled_df, "_mutate_then_fail", {"seen_dir": str(tmp_path / "result")}, restarts=1
+        )
+    assert res == {"failed_tiles": [], "nr_success": 3}
+    [rec] = [r for r in caplog.records if hasattr(r, "tile_run")]
+    assert rec.tile_run == {
+        "worker": "_mutate_then_fail", "tiles": 3, "failed": [], "retried": ["b"],
+    }
+
+
+def test_selection_one_collect_and_full_width_fanout(spark, tiled_df):
+    # with_list is one collect and returns a local frame; the fan-out
+    # runs spark.sql.shuffle.partitions tasks (not AQE's byte-coalesced
+    # few) behind a single Exchange.
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("tps-select", "with_list")
+    try:
+        found = TileSet(tiled_df.select("tile_id")).with_list(["a", "c", "nope"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert found.isLocal()
+    assert sorted(r.tile_id for r in found.collect()) == ["a", "c"]
+    # one collect; AQE runs the distinct's shuffle map stage as its own job
+    assert len(tracker.getJobIdsForGroup("tps-select")) <= 2
+
+    fanout = run_worker_over_tiles(tiled_df, "Example")
+    plan = fanout._jdf.queryExecution().executedPlan().toString()
+    assert plan.split("FlatMapGroupsInPandas", 1)[1].count("Exchange") == 1
+
+    # an input already hash-partitioned on tile_id by a tiny shuffle that
+    # AQE coalesces: the fan-out must not inherit that width
+    per_tile = tiled_df.groupBy("tile_id").agg(F.collect_list("v").alias("vs"))
+    sc.setJobGroup("tps-fanout", "fan-out")
+    try:
+        assert len(run_worker_over_tiles(per_tile, "Example").collect()) == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stages = [
+        sid
+        for jid in tracker.getJobIdsForGroup("tps-fanout")
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    last = tracker.getStageInfo(max(stages))
+    assert last.numTasks == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def test_builtin_workers_registered():
     # worker.py:754-763 registration parity (Spark-representable subset).
     assert {
@@ -125,8 +202,8 @@ def test_subprocess_worker_runs_external_binary(spark, tiled_df, tmp_path):
 
 
 def test_subprocess_worker_idempotent_rerun(spark, tiled_df, tmp_path):
-    # Overwrite-by-tile: a driver-level re-run (or a Spark task retry)
-    # must replace per-tile outputs, never duplicate or append them.
+    # Overwrite-by-tile: a second call (like an in-task retry or a Spark
+    # task re-run) must replace per-tile outputs, never duplicate them.
     cfg = {
         "cmd": ["python", "-c", "import sys; sys.stdout.write(sys.stdin.read())"],
         "out_dir": str(tmp_path),

@@ -100,9 +100,7 @@ def run_cmd(ctx, worker_key, data_path, tiles, tile_col, restart, config_json, t
     spark = get_spark(app_name=f"tps-run-{worker_key}")
     t0 = time.monotonic()
     data = spark.read.parquet(data_path)
-    if tiles and list(tiles) != ["all"]:
-        selected = TileSet(data.select(tile_col), tile_col=tile_col).with_list(list(tiles))
-        data = data.join(selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi")
+    data = TileSet(data.select(tile_col), tile_col=tile_col).restrict(data, tiles)
     result = run_with_retry(
         data, worker_key, json.loads(config_json), restarts=restart, tile_col=tile_col
     )
@@ -275,9 +273,7 @@ def export_cmd(data_path, out_dir, tiles, tile_col) -> None:
 
     spark = get_spark(app_name="tps-export")
     data = spark.read.parquet(data_path)
-    if tiles and list(tiles) != ["all"]:
-        selected = TileSet(data.select(tile_col), tile_col=tile_col).with_list(list(tiles))
-        data = data.join(selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi")
+    data = TileSet(data.select(tile_col), tile_col=tile_col).restrict(data, tiles)
     result = run_with_retry(data, "TileExporter", {"out_dir": out_dir}, tile_col=tile_col)
     click.echo(json.dumps(result))
     sys.exit(1 if result["failed_tiles"] else 0)

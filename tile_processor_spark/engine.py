@@ -162,11 +162,7 @@ class Engine:
     ) -> dict:
         """configure + run in one call; result keeps the reference contract
         {'failed_tiles': [...], 'nr_success': n} (processor.py:125)."""
-        if tiles and tiles != ["all"]:
-            selected = self.tile_set(data.select(tile_col), tile_col).with_list(tiles)
-            data = data.join(
-                selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi"
-            )
+        data = self.tile_set(data.select(tile_col), tile_col).restrict(data, tiles)
         merged = {**self.config.get("worker", {}), **(config or {})}
         return run_with_retry(data, worker, merged, restarts=restarts, tile_col=tile_col)
 

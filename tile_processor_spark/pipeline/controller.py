@@ -50,11 +50,7 @@ def example_controller(
 ) -> dict:
     """Example controller (controller.py:223-372 shape): select tiles by
     list (or all), run the worker over each tile group, bounded retry."""
-    if tiles and tiles != ["all"]:
-        selected = TileSet(data.select(tile_col), tile_col=tile_col).with_list(tiles)
-        data = data.join(
-            selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi"
-        )
+    data = TileSet(data.select(tile_col), tile_col=tile_col).restrict(data, tiles)
     return run_with_retry(data, worker_key, config, restarts=restarts, tile_col=tile_col)
 
 
@@ -83,9 +79,7 @@ def ahn_controller(
     from tile_processor_spark.spatial.join import bbox_join
 
     config = dict(config or {})
-    ts = TileSet(tile_index.select("tile_id"))
-    chosen = ts.with_list(tiles) if tiles and tiles != ["all"] else ts.all_in_index()
-    idx = tile_index.join(chosen, "tile_id", "left_semi")
+    idx = TileSet(tile_index.select("tile_id")).restrict(tile_index, tiles)
 
     matched = bbox_join(idx, elevation_index, cell_size=cell_size)
     versions = matched.groupBy("tile_id").agg(

@@ -43,11 +43,13 @@ class DirOutput:
         tile via partitionBy — tile filters then prune files.
 
         Dynamic partition overwrite (a per-write option, not a session
-        mutation) replaces ONLY the tile partitions present in ``df``:
-        re-running a failed tile subset — the reference's retry loop
-        (processor.py:89-125) and our ``run_with_retry`` — must not wipe
-        the other tiles' completed output, which static overwrite would
-        do at any scale."""
+        mutation) replaces ONLY the tile partitions present in ``df``, so
+        a rerun is overwrite-by-tile: writing a subset of tiles again (a
+        rerun of the failed tiles, as the reference's retry loop does at
+        processor.py:89-125) must not wipe the other tiles' completed
+        output, which static overwrite would do at any scale.
+        ``run_with_retry`` itself retries inside the fan-out task, right
+        after the failure, and writes nothing here."""
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import logging
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -31,6 +32,7 @@ class TileSet:
         if tile_col != "tile_id":
             index = index.withColumnRenamed(tile_col, "tile_id")
         self.index = index
+        self.tile_col = tile_col
 
     def all_in_index(self) -> DataFrame:
         """P2: SELECT DISTINCT tile FROM index (tileconfig.py:218-222)."""
@@ -38,18 +40,38 @@ class TileSet:
 
     def with_list(self, tiles: list[str]) -> DataFrame:
         """P3 + J9 (tileconfig.py:196-249): keep requested tiles that
-        exist; *warn* about unknown IDs; *raise* if none match."""
-        req = self.index.sparkSession.createDataFrame(
-            [(t,) for t in tiles], "tile_id string"
+        exist; *warn* about unknown IDs; *raise* if none match.
+
+        One collect fetches the requested IDs found in the index (at
+        most ``len(tiles)`` rows); the result is a local frame, so later
+        joins against it re-run nothing."""
+        requested = sorted({str(t) for t in tiles})
+        found = sorted(
+            str(r.tile_id)
+            for r in self.index.filter(F.col("tile_id").isin(requested))
+            .select("tile_id")
+            .distinct()
+            .collect()
         )
-        known = self.all_in_index()
-        missing = [r.tile_id for r in req.join(known, "tile_id", "left_anti").collect()]
+        missing = sorted(set(requested) - set(found))
         if missing:
-            log.warning("tiles not in index (skipped): %s", sorted(missing))
-        found = req.join(known, "tile_id", "left_semi")
-        if found.limit(1).count() == 0:
+            log.warning("tiles not in index (skipped): %s", missing)
+        if not found:
             raise ValueError(f"none of the requested tiles exist in the index: {tiles}")
-        return found
+        return self.index.sparkSession.createDataFrame(
+            pd.DataFrame({"tile_id": found}), "tile_id string"
+        )
+
+    def restrict(self, data: DataFrame, tiles: list[str] | None) -> DataFrame:
+        """``data`` limited to the rows of the tiles :meth:`with_list`
+        selects, joined on ``tile_col``; ``None`` or ``["all"]`` returns
+        ``data`` unchanged."""
+        if not tiles or list(tiles) == ["all"]:
+            return data
+        found = self.with_list(list(tiles))
+        return data.join(
+            found.withColumnRenamed("tile_id", self.tile_col), self.tile_col, "left_semi"
+        )
 
     def with_extent(self, features: DataFrame, extent_wkb: bytes) -> DataFrame:
         """within_extent (tileconfig.py:128-194): DISTINCT tiles whose

@@ -9,8 +9,11 @@ bool`` contract (worker.py:60, 181-189) with the side-effecting
 subprocess replaced by a returned (or written) DataFrame. Success is a
 status row, not an exit code.
 
-Workers that genuinely need an external binary use the subprocess escape
-hatch inside the function; Spark task retries make side effects
+Bounded retry (``--restart``) runs inside the task that holds the tile's
+rows: a failed attempt is retried right away, on a fresh copy of the
+group, not after the round in a second Spark job. Workers that genuinely
+need an external binary use the subprocess escape hatch inside the
+function; those retries and Spark's own task re-runs make side effects
 non-idempotent, so such workers must write overwrite-by-tile outputs
 (SURVEY.md §7 risk register).
 """
@@ -45,7 +48,9 @@ def list_workers() -> list[str]:
     return sorted(_REGISTRY)
 
 
-STATUS_SCHEMA = "tile_id string, success boolean, n_rows long, error string"
+STATUS_SCHEMA = (
+    "tile_id string, success boolean, n_rows long, error string, attempts int"
+)
 
 
 def run_worker_over_tiles(
@@ -53,39 +58,56 @@ def run_worker_over_tiles(
     worker_key: str,
     config: dict | None = None,
     tile_col: str = "tile_id",
+    restarts: int = 0,
 ) -> DataFrame:
     """Fan the worker out over tile groups; one status row per tile.
 
     The reference runs one thread + child process per tile
-    (processor.py:133-149); here each tile group is one Spark task. A
-    worker exception is *captured* into the status row (success=False)
-    rather than failing the job — failure collection and retry live in
-    ``processor.run_with_retry``.
+    (processor.py:133-149); here each tile group is one pandas call in a
+    Spark task. A worker exception is *captured* into the status row
+    (success=False) rather than failing the job. A failed tile is retried
+    up to ``restarts`` times in the same task, each attempt on its own
+    copy of the group so an attempt that mutated its input and then
+    raised cannot leak that into the next; ``attempts`` counts the calls.
     """
     config = dict(config or {})
     fn = get_worker(worker_key)
+    last = max(restarts, 0) + 1
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
         tile = str(pdf[tile_col].iloc[0])
-        try:
-            out = fn(tile, pdf, config)
+        for attempt in range(1, last + 1):
+            try:
+                # the last attempt may have the group itself: no retry follows it
+                out = fn(tile, pdf.copy() if attempt < last else pdf, config)
+            except Exception:
+                error = traceback.format_exc(limit=3)
+                continue
             n = len(out) if hasattr(out, "__len__") else int(bool(out))
             return pd.DataFrame(
-                {"tile_id": [tile], "success": [True], "n_rows": [n], "error": [None]}
+                {"tile_id": [tile], "success": [True], "n_rows": [n],
+                 "error": [None], "attempts": [attempt]}
             )
-        except Exception:
-            return pd.DataFrame(
-                {
-                    "tile_id": [tile],
-                    "success": [False],
-                    "n_rows": [0],
-                    "error": [traceback.format_exc(limit=3)],
-                }
-            )
+        return pd.DataFrame(
+            {"tile_id": [tile], "success": [False], "n_rows": [0],
+             "error": [error], "attempts": [last]}
+        )
 
-    # groupBy already shuffles on the key — an explicit repartition here
-    # would double the exchange for every worker run.
-    return data.groupBy(tile_col).applyInPandas(_run, STATUS_SCHEMA)
+    # Python tile groups are byte-light but CPU-heavy, so AQE's byte-sized
+    # coalescing would pack them into fewer tasks than cores. An explicit
+    # partition count is never coalesced. It is taken on a computed key, a
+    # hash of the tile ID: AQE drops a repartition whose input is already
+    # hash-partitioned on the same key (as a join on tile_id leaves it),
+    # and would then coalesce that input. Grouping by (key, tile) keeps
+    # one group per tile and is satisfied by the repartition, so the
+    # fan-out is still one Exchange.
+    n = int(data.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    key = F.hash(F.col(tile_col))
+    return (
+        data.repartition(n, key)
+        .groupBy(key, F.col(tile_col))
+        .applyInPandas(_run, STATUS_SCHEMA)
+    )
 
 
 # --- built-in workers (worker.py:754-763 registration parity) -------------
@@ -131,9 +153,10 @@ def _subprocess_worker(tile_id: str, pdf: pd.DataFrame, config: dict):
     - ``config['cmd']`` is an argv list; each element may use ``{tile}``.
     - The tile's rows stream in as CSV on stdin; stdout is the product.
     - **Idempotence**: output goes to ``out_dir/tile=<id>.out`` via
-      write-temp + atomic rename, so Spark task retries AND driver-level
-      ``run_with_retry`` re-runs overwrite rather than duplicate — the
-      SURVEY §7 side-effect rule for subprocess workers.
+      write-temp + atomic rename, so a ``restarts`` retry (which runs
+      right after the failure, in the same task) and a Spark task re-run
+      overwrite rather than duplicate — the SURVEY §7 side-effect rule
+      for subprocess workers.
     - Nonzero exit raises; run_worker_over_tiles converts that into a
       success=False status row, exactly like the reference's
       returncode!=0 → False.
